@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.QueryPack
 import graft.functions.VectorOps
-import graft.sources.Tables
+import graft.sources.{SessionCache, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -49,8 +49,9 @@ object Dedup extends QueryPack {
     * shingle instead of the string, so every downstream shuffle and
     * array op moves 8 bytes per shingle, never the text.
     *
-    * MATERIALIZED once per (session, corpus) — r17 optimization round,
-    * the [[spanGramCache]] / canonicalCache pattern one level down:
+    * MATERIALIZED once per session and corpus version ([[SessionCache]])
+    * — r17 optimization round, the [[spanGramsFor]] /
+    * [[componentMapFor]] device one level down:
     * the shingle projection is inlined into EVERY consumer reference
     * (both prefix sides + both verify sides of the PPJoin keys), so
     * each of `dedup_ngram_jaccard` / `_containment` / `_incremental` /
@@ -60,14 +61,8 @@ object Dedup extends QueryPack {
     * order 150 MB at sf0.1 — held serialized; every consumer reference
     * is then a columnar cache scan. Per-invocation pair joins, bands,
     * and verification are untouched. */
-  private val shingleCache = new graft.sources.CorpusCache[Unit]
-
-  def clearShingleCache(): Unit = shingleCache.clear()
-
   private def hashedShingles(spark: SparkSession, dir: String): DataFrame =
-    shingleCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), ())(
+    SessionCache.getOrBuild(spark, dir, Seq("documents"), "dedup.shingles")(
       hashedShinglesOf(Tables.documents(spark, dir)).localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
@@ -556,21 +551,15 @@ object Dedup extends QueryPack {
       .select(col("vec_id"), col("pos").as("tbl"), col("col").as("sig"))
   }
 
-  /** The (vec_id, tbl, sig) bucket rows materialized once per (session,
-    * embeddings corpus) — r17 optimization round: the self-join form
-    * below evaluates the fused 128-plane signature pass once PER SIDE
+  /** The (vec_id, tbl, sig) bucket rows materialized once per session
+    * and embeddings version ([[SessionCache]]) — r17 optimization round:
+    * the self-join form below evaluates the fused 128-plane signature pass once PER SIDE
     * per invocation (the deliberate codegen trade vs the
     * ObjectHashAggregate bucket-group); with the frame checkpointed the
     * pass runs once per corpus and both sides scan ~|V|·32 rows of
     * three longs. Shared with [[bucketStats]]' cosine telemetry band. */
-  private val cosineBandCache = new graft.sources.CorpusCache[Unit]
-
-  def clearCosineBandCache(): Unit = cosineBandCache.clear()
-
   private def cosineBands(spark: SparkSession, dir: String): DataFrame =
-    cosineBandCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "embeddings"), ())(
+    SessionCache.getOrBuild(spark, dir, Seq("embeddings"), "dedup.cosine_bands")(
       cosineBandsOf(Tables.embeddings(spark, dir)).localCheckpoint(true,
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
@@ -821,30 +810,18 @@ object Dedup extends QueryPack {
         (col("doc_id") === col("component")).cast("long").as("is_canonical"))
       .orderBy(col("doc_id"))
 
-  /** Per-session materialization of [[componentMapOf]]'s (doc_id,
-    * component) frame, keyed by (session, dir, edge-tier) — the
-    * [[graft.operators.Curation]] co-purchase-cache precedent applied
-    * to the canonical family (r15 verdict item 3): `dedup_canonical_map`
-    * / `_best` / `_embed` share the exact-PPJoin edge build + component
-    * stage (and `_map_lsh` its own LSH tier) instead of re-shingling
-    * the corpus per key. The cached frame is one (long, long) row per
-    * doc, held as a localCheckpoint; callers that mutate the underlying
-    * files must [[clearCanonicalCache]]. */
-  private val canonicalCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  def clearCanonicalCache(): Unit = {
-    canonicalCache.values.foreach(
-      org.apache.spark.sql.GraftBridge.releaseLocalCheckpoint)
-    canonicalCache.clear()
-  }
-
-  /** The cached (doc_id, component) frame for the named edge tier
-    * ("exact" = PPJoin verified pairs; "lsh" = MinHash-LSH verified
-    * pairs). */
+  /** [[componentMapOf]]'s (doc_id, component) frame for the named edge
+    * tier ("exact" = PPJoin verified pairs; "lsh" = MinHash-LSH
+    * verified pairs), materialized once per session and corpus version
+    * ([[SessionCache]]) — the [[graft.operators.Curation]] co-purchase
+    * precedent applied to the canonical family (r15 verdict item 3):
+    * `dedup_canonical_map` / `_best` / `_embed` share the exact-PPJoin
+    * edge build + component stage (and `_map_lsh` its own LSH tier)
+    * instead of re-shingling the corpus per key. The cached frame is
+    * one (long, long) row per doc, held as a localCheckpoint. */
   private def componentMapFor(spark: SparkSession, dir: String,
       tier: String): DataFrame =
-    canonicalCache.getOrElseUpdate((spark, dir, tier), {
+    SessionCache.getOrBuild(spark, dir, Seq("documents"), s"dedup.canonical:$tier") {
       val docs = Tables.documents(spark, dir)
       val pairsOf: DataFrame => DataFrame = tier match {
         case "lsh" => d => minhashLshOf(d, HotBucketCap)
@@ -853,7 +830,7 @@ object Dedup extends QueryPack {
           .select(col("doc_a"), col("doc_b"))
       }
       componentMapOf(docs, pairsOf).localCheckpoint()
-    })
+    }
 
   /** The shared component stage under the canonical-map family: every
     * doc labeled with the MIN doc_id of its near-dup connected
@@ -1045,22 +1022,18 @@ object Dedup extends QueryPack {
     spanLenOf(r.getLong(0), r.getLong(1))
   }
 
-  /** Per-session cache of the derived span length, keyed by (dir,
-    * planted?): L is a property of the CORPUS, shared by all five
-    * substring keys — re-deriving it per key was a measured ~0.4 s of
-    * repeated vocab-grain aggregation per invocation in-sweep. Same
-    * immutable-fixture contract as [[canonicalCache]]. */
-  private val spanLenDirCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean), Int]
-
-  def clearSpanLenCache(): Unit = spanLenDirCache.clear()
-
+  /** The derived span length per (corpus version, planted?), cached per
+    * session ([[SessionCache]]): L is a property of the CORPUS, shared
+    * by all five substring keys — re-deriving it per key was a measured
+    * ~0.4 s of repeated vocab-grain aggregation per invocation
+    * in-sweep. */
   private def spanLenFor(spark: SparkSession, dir: String,
       planted: Boolean): Int =
-    spanLenDirCache.getOrElseUpdate((spark, dir, planted), {
+    SessionCache.getOrBuild(spark, dir, Seq("documents"),
+        s"dedup.span_len:$planted") {
       val docs = Tables.documents(spark, dir).toDF()
       deriveSpanLen(if (planted) plantedSubstringDocs(docs) else docs)
-    })
+    }
 
   /** The substring family's PLANTED gate corpus (r15 verdict item 1):
     * the fixture word-soup carries almost no organic ≥ 8-token overlap
@@ -1146,10 +1119,9 @@ object Dedup extends QueryPack {
       spanGramsFor(spark, dir, planted = true, hashed = true, l), l)
   }
 
-  /** Per-session materialization of the pruned gram frame, keyed by
-    * (session, corpus fingerprint, planted?, hashed?, L) — the
-    * [[canonicalCache]] / Similarity-statCache pattern applied to the
-    * substring family (r17 optimization round): the five substring keys
+  /** The pruned gram frame per (corpus version, planted?, hashed?, L),
+    * materialized once per session ([[SessionCache]]) — the
+    * [[componentMapFor]] device applied to the substring family (r17 optimization round): the five substring keys
     * re-ran the SAME gram explode + hot-gram df aggregate + anti-join
     * per invocation — `dedup_substring_self` and `_spans` share the
     * (planted, raw, L) frame exactly, `_hashed` the (planted, hashed)
@@ -1158,19 +1130,11 @@ object Dedup extends QueryPack {
     * Pinned DISK_ONLY, not in-memory: the raw-gram frames are ~18M rows
     * of gram strings at sf0.1 (order 1 GB), and pinning that on an 8 GB
     * bench heap taxes every LATER key's GC — local-disk blocks ride the
-    * OS page cache instead. Callers that mutate the underlying files
-    * must [[clearSpanGramCache]] (fingerprint keys also self-invalidate
-    * on any listable rewrite). */
-  private val spanGramCache =
-    new graft.sources.CorpusCache[(Boolean, Boolean, Int)]
-
-  def clearSpanGramCache(): Unit = spanGramCache.clear()
-
+    * OS page cache instead. */
   private def spanGramsFor(spark: SparkSession, dir: String,
       planted: Boolean, hashed: Boolean, spanLen: Int): DataFrame =
-    spanGramCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), (planted, hashed, spanLen)) {
+    SessionCache.getOrBuild(spark, dir, Seq("documents"),
+        s"dedup.span_grams:$planted:$hashed:$spanLen") {
       val docs0 = Tables.documents(spark, dir).toDF()
       val docs = if (planted) plantedSubstringDocs(docs0) else docs0
       spanGramsOf(docs, hashed, spanLen)
@@ -1223,7 +1187,7 @@ object Dedup extends QueryPack {
 
   /** Pair join + islands over an already-built pruned gram frame — the
     * per-invocation half of the spans keys (the gram stage itself is
-    * shared through [[spanGramCache]] on the dir-level paths). */
+    * shared through [[spanGramsFor]] on the dir-level paths). */
   private def substringSpansOnGrams(pruned: DataFrame,
       spanLen: Int): DataFrame = {
     val m = pruned.as("x").join(pruned.as("y"),

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.QueryPack
-import graft.sources.Tables
+import graft.sources.{SessionCache, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,11 +73,11 @@ object TextAnalysis extends QueryPack {
   private val Bm25TfCap = 1000L
 
   /** (doc_id, dl, toks) — the tokenized corpus, materialized ONCE per
-    * (session, documents fingerprint) and shared by the three BM25
-    * retrieval keys (r17 verdict item 1, the shingle-cache device at
-    * token grain): each key referenced `documents` 3-4× per plan (tf /
-    * corpus stats / query derivation) and re-ran the parquet scan +
-    * `split` per reference per invocation — ~9 tokenize passes per
+    * session and corpus version ([[SessionCache]]) and shared by the
+    * three BM25 retrieval keys (r17 verdict item 1, the shingle-cache
+    * device at token grain): each key referenced `documents` 3-4× per
+    * plan (tf / corpus stats / query derivation) and re-ran the parquet
+    * scan + `split` per reference per invocation — ~9 tokenize passes per
     * bench rep across the trio. With the frame checkpointed every
     * reference is a columnar cache scan; df/avgdl aggregation, query
     * extraction, scoring and all query-dependent pruning stay inside
@@ -86,23 +86,13 @@ object TextAnalysis extends QueryPack {
     * MEMORY_AND_DISK_SER: the token arrays are the corpus text
     * re-sliced (~10 MB at sf0.1) — order documents.parquet, far below
     * the span-gram frames that needed DISK_ONLY. */
-  private val tokenCache = new graft.sources.CorpusCache[Unit]
-
-  def clearTokenCache(): Unit = tokenCache.clear()
-
   private def tokenizedDocs(spark: SparkSession, dir: String): DataFrame =
-    tokenCache.getOrBuild(
-      org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), ())(
-      tokenizedOf(Tables.documents(spark, dir).toDF()).localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-
-  /** The tokenize projection itself — inlined (uncached) by the `*Of`
-    * test seams so spec inputs need no session cache. */
-  private[graft] def tokenizedOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      expr(s"cast(size($toks) as bigint)").as("dl"),
-      expr(toks).as("toks"))
+    SessionCache.getOrBuild(spark, dir, Seq("documents"), "text.tokens")(
+      Tables.documents(spark, dir).select(col("doc_id"),
+          expr(s"cast(size($toks) as bigint)").as("dl"),
+          expr(toks).as("toks"))
+        .localCheckpoint(true,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
 
   /** BM25 top-k retrieval (Robertson/Spärck Jones; k1 = 1.2, b = 0.75)
     * in EXACT integer arithmetic, so the ranking is oracle-paired where
@@ -139,9 +129,6 @@ object TextAnalysis extends QueryPack {
     * per-query top-k window over matched docs only. */
   def bm25TopK(spark: SparkSession, dir: String): DataFrame =
     bm25TopKOnToks(tokenizedDocs(spark, dir))
-
-  private[graft] def bm25TopKOf(docs: DataFrame): DataFrame =
-    bm25TopKOnToks(tokenizedOf(docs))
 
   private def bm25TopKOnToks(tok: DataFrame): DataFrame = {
     import graft.functions.FixedLog2
@@ -229,9 +216,6 @@ object TextAnalysis extends QueryPack {
   def bm25Phrase(spark: SparkSession, dir: String): DataFrame =
     bm25PhraseOnToks(tokenizedDocs(spark, dir))
 
-  private[graft] def bm25PhraseOf(docs: DataFrame): DataFrame =
-    bm25PhraseOnToks(tokenizedOf(docs))
-
   private def bm25PhraseOnToks(tok: DataFrame): DataFrame = {
     import graft.functions.FixedLog2
     val P = PhraseLen
@@ -311,9 +295,6 @@ object TextAnalysis extends QueryPack {
     * thousands of small partitions, never one global sort. */
   def bm25Proximity(spark: SparkSession, dir: String): DataFrame =
     bm25ProximityOnToks(tokenizedDocs(spark, dir))
-
-  private[graft] def bm25ProximityOf(docs: DataFrame): DataFrame =
-    bm25ProximityOnToks(tokenizedOf(docs))
 
   private def bm25ProximityOnToks(tok: DataFrame): DataFrame = {
     import graft.functions.FixedLog2
@@ -864,32 +845,26 @@ object TextAnalysis extends QueryPack {
     // the trainer RUNS per invocation (the merge table IS this query's
     // result — caching it would time nothing); it publishes what it
     // trained so the TOKENIZE key, whose result is the per-doc token
-    // accounting, can reuse the corpus statistic (bpeMergeCache)
+    // accounting, can reuse the corpus statistic (bpeMergesFor)
     val m = trainBpeMerges(spark, Tables.documents(spark, dir), BpeRounds)
-    bpeMergeCache.put(bpeKey(spark, dir, BpeRounds), m)
+    bpeMergesFor(spark, dir)(m)
     mergesToDF(spark, m)
   }
 
   private val BpeRounds = 12
 
-  /** Per-corpus cache of the TRAINED merge table — the
-    * [[graft.operators.Similarity]] statCache pattern (session UUID +
-    * corpus fingerprint keyed, bounded by clearing): the merge table is
-    * a STATISTIC OF THE CORPUS, shared by the trainer key and the
+  /** The TRAINED merge table, cached per session and corpus version
+    * ([[SessionCache]], like the [[graft.operators.Similarity]] trained
+    * statistics): the merge table is a STATISTIC OF THE CORPUS, shared by the trainer key and the
     * tokenizer key — `text_bpe_tokenize` re-ran the full 12-round
     * trainer (explode + pair aggregate + argmax collect + fuse pass,
     * per round) before ever tokenizing a document, measured ~1.8 s of
     * its 3.2 s at sf0.1. Values are driver-side Seqs of ≤ rounds
     * 5-tuples — bytes, not frames. */
-  private val bpeMergeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(Long, String, String, String, Long)]]
-
-  /** Test seam: drop cached merge tables so a rerun genuinely retrains. */
-  def clearBpeCache(): Unit = bpeMergeCache.clear()
-
-  private def bpeKey(spark: SparkSession, dir: String, rounds: Int) =
-    (org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-      Tables.tableFingerprint(dir, "documents"), rounds)
+  private def bpeMergesFor(spark: SparkSession, dir: String)(
+      train: => Seq[(Long, String, String, String, Long)]) =
+    SessionCache.getOrBuild(spark, dir, Seq("documents"),
+      s"text.bpe_merges:$BpeRounds")(train)
 
   private def mergesToDF(spark: SparkSession,
       m: Seq[(Long, String, String, String, Long)]): DataFrame = {
@@ -985,13 +960,12 @@ object TextAnalysis extends QueryPack {
     * independently-trained reference table, plus the rounds=0
     * degenerate (n_tokens == n_chars). */
   def bpeTokenize(spark: SparkSession, dir: String): DataFrame = {
-    // ride the trained-statistic cache (bpeMergeCache): the tokenizer's
+    // ride the trained-statistic cache (bpeMergesFor): the tokenizer's
     // RESULT — per-doc (n_words, n_chars, n_tokens) — is recomputed
     // from the corpus per invocation; only the merge-table statistic is
     // reused, exactly like the PQ codebooks / OPQ rotation
     val docs = Tables.documents(spark, dir)
-    val m = bpeMergeCache.getOrElseUpdate(bpeKey(spark, dir, BpeRounds),
-      trainBpeMerges(spark, docs, BpeRounds))
+    val m = bpeMergesFor(spark, dir)(trainBpeMerges(spark, docs, BpeRounds))
     bpeTokenizeWith(docs, m.map(t => (t._2, t._3)))
   }
 

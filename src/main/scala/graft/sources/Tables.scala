@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
@@ -48,30 +49,19 @@ object Tables {
     }
     raw.withColumn("ts", ts)
   }
-  /** Estimated scan-task count from a plain file listing — what the
+  /** Estimated scan-task count of a listed table — what the
     * FileSourceScan would schedule (one task per maxPartitionBytes
     * split, at least one per file). A pure driver-side metadata probe:
     * the previous `df.rdd.getNumPartitions` probe materialized the
-    * physical RDD lineage per call. Unlistable paths (remote schemes,
-    * missing dirs) report many-splits so fan-out stays a no-op. */
-  private def scanSplits(spark: SparkSession, dir: String, name: String): Int = {
-    val root = new java.io.File(s"$dir/$name.parquet")
-    val files =
-      if (root.isDirectory)
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-      else if (root.isFile) Array(root)
-      else Array.empty[java.io.File]
-    if (files.isEmpty) Int.MaxValue
-    else {
-      val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-      files.map(f => math.max(1L, (f.length + maxSplit - 1) / maxSplit))
-        .sum.min(Int.MaxValue.toLong).toInt
-    }
+    * physical RDD lineage per call. */
+  private def scanSplits(spark: SparkSession, files: Seq[FileStatus]): Long = {
+    val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
+    files.map(f => math.max(1L, (f.getLen + maxSplit - 1) / maxSplit)).sum
   }
 
-  /** Per-session checkpoint of the FANNED-OUT documents corpus.
+  /** The FANNED-OUT documents corpus, checkpointed once per session
+    * and corpus version ([[SessionCache]]).
     *
     * Fan-out (since r8): the fixture parquet is a single row group, so
     * Spark schedules ONE scan task no matter the core count — and the
@@ -85,29 +75,29 @@ object Tables {
     * Checkpoint (r18, r17 verdict item 5): several text/dedup keys
     * reference `documents` 2-4× per plan, and each reference re-paid
     * the fan-out's corpus-wide round-robin exchange (plus the parquet
-    * decode under it) per invocation. The checkpoint pins the fanned frame once per
-    * (session, corpus fingerprint) — every later reference is a
-    * columnar cache scan with the parallel layout already in place.
-    * Built ONLY when the fan-out guard fires (a sub-splits fixture
-    * layout), so a production many-split table keeps its plain
-    * pushdown-friendly scan and nothing corpus-sized is ever pinned at
-    * 100 TB. MEMORY_AND_DISK_SER: the fixture corpus is ~10 MB of
-    * text at sf0.1 (measured via the storage tab — far from the heap
-    * tax the span-gram frames carry). */
-  private val docCache = new CorpusCache[Unit]
-
-  def clearDocCache(): Unit = docCache.clear()
-
+    * decode under it) per invocation. The checkpoint pins the fanned
+    * frame once, so every later reference is a columnar cache scan
+    * with the parallel layout already in place. Built ONLY when the
+    * fan-out guard fires (a sub-splits fixture layout), so a
+    * production many-split table keeps its plain pushdown-friendly
+    * scan and nothing corpus-sized is ever pinned at 100 TB.
+    * MEMORY_AND_DISK_SER: the fixture corpus is ~10 MB of text at
+    * sf0.1 (measured via the storage tab — far from the heap tax the
+    * span-gram frames carry).
+    *
+    * One listing per call serves both the fan-out guard and the cache
+    * fingerprint, and the parquet read (a schema-inference job) runs
+    * only on a cache miss or on the plain-scan path — a hit runs no
+    * job. */
   def documents(spark: SparkSession, dir: String): DataFrame = {
-    val raw = read(spark, dir, "documents")
+    val files = listing(spark, dir, "documents")
     val cores = spark.sparkContext.defaultParallelism
-    if (scanSplits(spark, dir, "documents") * 4 <= cores)
-      docCache.getOrBuild(
-        org.apache.spark.sql.GraftBridge.sessionUUID(spark),
-        tableFingerprint(dir, "documents"), ())(
-        raw.repartition(cores).localCheckpoint(true,
+    if (scanSplits(spark, files) * 4 <= cores)
+      SessionCache.getOrBuildListed(spark, dir,
+          Map("documents" -> tableFingerprint(files)), "tables.documents")(
+        read(spark, dir, "documents").repartition(cores).localCheckpoint(true,
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
-    else raw
+    else read(spark, dir, "documents")
   }
   /** NOT fanned out: embedding consumers are codegen'd native passes
     * (dot products, hyperplane signatures) that don't serialize on the
@@ -130,33 +120,39 @@ object Tables {
   def registerAll(spark: SparkSession, dir: String): Unit =
     all.foreach(n => read(spark, dir, n).createOrReplaceTempView(n))
 
-  /** Cheap per-table invalidation signal for the per-corpus trained-
-    * statistic caches: the RECURSIVE parquet file listing with sizes
-    * and mtimes — the [[graft.operators.Similarity]] corpusFingerprint
-    * device, generalized to any fixture table (the text-side caches key
-    * on `documents`, not `embeddings`). Recursion matters (ADVICE r17):
-    * a partitioned parquet dir holds only nested part subdirectories,
-    * and a top-level-files-only listing came back empty — the caches
-    * then served stale results after a corpus rewrite with no
-    * invalidation signal. Unlistable paths (non-local FS, missing dir)
-    * still fall back to the dir string — per-path caching without
-    * rewrite detection — but now log loudly so the degradation is
-    * visible; such callers must clear the caches explicitly. */
-  private[graft] def tableFingerprint(dir: String, table: String): String = {
-    val root = new java.io.File(s"$dir/$table.parquet")
-    def walk(f: java.io.File): Array[java.io.File] =
-      if (f.isFile) Array(f)
-      else if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .flatMap(walk).sortBy(_.getPath)
-      else Array.empty[java.io.File]
-    val files = walk(root)
-    if (files.isEmpty) {
-      System.err.println(s"[graft] tableFingerprint: $dir/$table.parquet " +
-        "is unlistable — per-corpus caches will NOT self-invalidate on " +
-        "rewrites of this table; clear them explicitly")
-      s"unlistable:$dir/$table"
-    } else files.map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
-      .mkString(s"$dir/$table|", ",", "")
+  /** The one file listing of a source table: recursive (a partitioned
+    * dir holds only nested part subdirectories) and on the Hadoop
+    * FileSystem API, so a bare local path, `file://` and `s3a://` dirs
+    * list alike. Hidden entries (`_SUCCESS`, `.crc`, `_temporary`) are
+    * skipped, as the parquet reader skips them. A missing table is a
+    * named error — no sentinel listing that would key a cache which
+    * never invalidates. `listStatus`, not `listFiles`: on the local
+    * filesystem `listFiles` builds a `LocatedFileStatus` per file, which
+    * loads its permissions by forking `ls` (measured 4.4-5.2 ms per
+    * single-file table vs 0.02-0.06 ms). */
+  private[graft] def listing(spark: SparkSession, dir: String,
+      table: String): Seq[FileStatus] = {
+    val root = new Path(s"$dir/$table.parquet")
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap { f =>
+        val name = f.getPath.getName
+        if (name.startsWith("_") || name.startsWith(".")) Nil
+        else if (f.isDirectory) walk(f.getPath)
+        else Seq(f)
+      }
+    try walk(root).sortBy(_.getPath.toString)
+    catch {
+      case e: java.io.FileNotFoundException =>
+        throw new java.io.FileNotFoundException(
+          s"source table '$table' not found at $root").initCause(e)
+    }
   }
+
+  /** A table version's identity — its files' paths, sizes and mtimes —
+    * which [[SessionCache]] compares to decide whether an entry built
+    * from the table is still valid. */
+  private[graft] def tableFingerprint(files: Seq[FileStatus]): String =
+    files.map(f => s"${f.getPath}:${f.getLen}:${f.getModificationTime}")
+      .mkString(",")
 }

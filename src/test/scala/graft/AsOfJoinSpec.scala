@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.AsOfJoin
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class AsOfJoinSpec extends AnyFunSuite {

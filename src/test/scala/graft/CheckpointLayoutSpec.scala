@@ -22,7 +22,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CheckpointLayoutSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  import spark.implicits._
 
   private def flatten(p: SparkPlan): Seq[SparkPlan] = {
     val kids = p match {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.plans.ExactRank
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The distributed exact-rank scan vs a global ROW_NUMBER window —

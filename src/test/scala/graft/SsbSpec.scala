@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Ssb
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 

@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 object ProfPq {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[32]")
@@ -11,7 +10,7 @@ object ProfPq {
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.1"
     def time(tag: String)(f: => Any): Unit = {
-      val t0 = System.nanoTime; val n = f
+      val t0 = System.nanoTime; f
       println(f"PROF $tag%-24s ${(System.nanoTime-t0)/1e9}%8.2f s")
     }
     import graft.operators.Similarity
